@@ -205,10 +205,7 @@ def q_sizing_report_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     previously verified only by pytest)."""
     from impala_base_to_cdw_sizing_spark.plans.reports import report_values_df
 
-    accepted = _accepted(spark, sf_dir)
-    classified = classify(derive(accepted, P))
-    kept, pruned = prune_split(classified, P)
-    return report_values_df(kept, accepted, pruned, P)
+    return report_values_df(_classified(spark, sf_dir), P)
 
 
 # --- contract -----------------------------------------------------------------

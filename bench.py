@@ -84,13 +84,8 @@ def _run_ep2(spark, sf_dir: str) -> float:
 
     res = run_sizing(query_history_from_events(spark, sf_dir), DEFAULT_PARAMS)
     collect_report_values(res, DEFAULT_PARAMS)  # forces every branch
-    # unpersist the frames that actually hold the caches (kept is a
-    # filter over derived, unpersisting it was a no-op)
-    if res.routed.derived is not None:
-        res.routed.derived.unpersist()
-    res.summary.unpersist()
-    if res.sweep_events is not None:
-        res.sweep_events.unpersist()
+    # the run's one cache (kept is a filter over derived)
+    res.routed.derived.unpersist()
     return round(time.perf_counter() - t0, 3)
 
 

@@ -4,8 +4,8 @@
 
 Validates argv exactly like the reference (one config argument, file must
 exist — ``impala_query_sizing.py:58-69``), runs the replay pipeline
-(CSV/parquet input → derive → classify → route → sinks → reports), prints
-the five report sections, and writes the three output files if configured.
+(CSV/parquet input → derive → classify → route → reports → sinks), writes
+the three output files if configured, and prints the five report sections.
 """
 
 from __future__ import annotations
@@ -24,7 +24,6 @@ def main(argv: list[str]) -> int:
     print(f"Config file: {argv[1]}")
 
     from .config import parse_conf
-    from .operators.classify import classify
     from .plans.pipeline import run_sizing
     from .plans.reports import collect_report_values, format_reports
     from .schemas import OUTPUT_FIELDS
@@ -36,8 +35,6 @@ def main(argv: list[str]) -> int:
     if not params.input_file and not params.cm_url:
         print("ERROR: set input_file (EP2 replay) or cm_url (EP1 API mode)")
         return 1
-
-    from pyspark.sql import functions as F
 
     from .plans.pipeline import prepare_query_history, run_api_sizing
 
@@ -61,22 +58,22 @@ def main(argv: list[str]) -> int:
             print(f"ERROR: API fetch from {params.cm_url} failed: {e}")
             return 1
 
+    # the report actions first: they materialize the cached table the
+    # sinks then read, and hand the sinks the prune count
+    values = collect_report_values(result, params)
     if params.output_file:
-        kept24 = _project24(classify(result.routed.kept))
-        pruned24 = _project24(classify(result.routed.pruned))
         write_sizing_outputs(
-            kept=kept24,
-            pruned=pruned24,
-            skipped=result.routed.skipped.withColumns(
-                {"start_ms": F.col("start_ms"), "end_ms": F.col("end_ms")}
-            ),
+            kept=_project24(result.routed.kept),
+            pruned=_project24(result.routed.pruned),
+            skipped=result.routed.skipped,
             output_cols=OUTPUT_FIELDS,
             main_path=params.output_file,
             pruned_path=params.prune_output_file or params.output_file + ".pruned",
             skipped_path=params.skip_query_file or params.output_file + ".skipped",
+            prune_count=values.individual["prune_count"],
         )
 
-    print(format_reports(collect_report_values(result, params)))
+    print(format_reports(values))
     return 0
 
 

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import SizingParams
+from ..schemas import SIZE_ORDER
 
 DEC = "decimal(38,6)"
 
@@ -51,32 +52,59 @@ def dsum_sql(x: str) -> str:
     return dec_to_double_sql(f"SUM(CAST(({x}) AS DECIMAL(38,6)))")
 
 
+def _where(c: Column, keep: Column | None) -> Column:
+    """``c`` on the rows where ``keep`` holds, NULL elsewhere — so an
+    aggregate over it skips the other rows (every row when ``keep`` is
+    None)."""
+    return c if keep is None else F.when(keep, c)
+
+
+def _pool_set(keep: Column | None = None) -> Column:
+    return F.collect_set(_where(F.col("pool"), keep))  # drops NULL pools
+
+
+def summary_aggs(keep: Column | None = None) -> list[Column]:
+    """G2+G3+G6+G8 as aggregate columns over the rows where ``keep``
+    holds — shared by :func:`summarize` and the fused report pass."""
+
+    def w(c: Column) -> Column:
+        return _where(c, keep)
+
+    return [
+        F.max(w(F.col("num_backends"))).alias("max_backends"),
+        F.max(w(F.col("avg_vcores"))).alias("max_vcores"),
+        F.max(w(F.col("avg_mem"))).alias("max_mem"),
+        F.max(w(F.col("avg_data"))).alias("max_data"),
+        F.max(w(F.col("avg_data_rate"))).alias("max_data_rate"),
+        F.max(w(F.col("avg_spill"))).alias("max_spill"),
+        F.max(w(F.col("min_executor_pod"))).alias("min_executor_pod_workload"),
+        F.size(_pool_set(keep)).cast("long").alias("n_pools"),
+        dsum(w((F.col("duration_millis") - F.col("admission_wait")) / 1000.0)).alias(
+            "total_query_time"
+        ),
+        dsum(w(F.col("reqd_agg_mem") * F.col("duration_sec"))).alias("util_mem"),
+        dsum(w(F.col("cpu_time_sec"))).alias("util_cpu"),
+        dsum(w(F.col("reqd_cache_gb") * F.col("duration_sec"))).alias("util_cache"),
+        dsum(w(F.col("memory_spilled_gb") * F.col("duration_sec"))).alias(
+            "util_spill"
+        ),
+    ]
+
+
+def pools_agg(keep: Column | None = None) -> Column:
+    """The sorted distinct pools (NULL dropped, as ``n_pools`` counts)."""
+    return F.sort_array(_pool_set(keep)).alias("pools")
+
+
 def summarize(kept: DataFrame, total_queries_df: DataFrame) -> DataFrame:
     """G1+G2+G3+G6+G8 as one single-row DataFrame.
 
     ``kept``: derived rows within the pod limit (post D3).
     ``total_queries_df``: the pre-prune accepted set (G1 counts it).
     """
-    agg = kept.agg(
-        F.max("num_backends").alias("max_backends"),
-        F.max("avg_vcores").alias("max_vcores"),
-        F.max("avg_mem").alias("max_mem"),
-        F.max("avg_data").alias("max_data"),
-        F.max("avg_data_rate").alias("max_data_rate"),
-        F.max("avg_spill").alias("max_spill"),
-        F.max("min_executor_pod").alias("min_executor_pod_workload"),
-        F.countDistinct("pool").alias("n_pools"),
-        dsum((F.col("duration_millis") - F.col("admission_wait")) / 1000.0).alias(
-            "total_query_time"
-        ),
-        dsum(F.col("reqd_agg_mem") * F.col("duration_sec")).alias("util_mem"),
-        dsum(F.col("cpu_time_sec")).alias("util_cpu"),
-        dsum(F.col("reqd_cache_gb") * F.col("duration_sec")).alias("util_cache"),
-        dsum(F.col("memory_spilled_gb") * F.col("duration_sec")).alias("util_spill"),
-    )
     total = total_queries_df.agg(F.count("*").alias("total_queries"))
     # two 1-row frames: crossJoin is a no-shuffle broadcast at this size
-    return total.crossJoin(agg)
+    return total.crossJoin(kept.agg(*summary_aggs()))
 
 
 def summarize_sql(params: SizingParams) -> str:
@@ -104,36 +132,77 @@ WHERE min_executor_pod <= {params.pod_limit}
 """
 
 
-def argmax_query(kept: DataFrame) -> DataFrame:
-    """G4: query id with the highest pod demand, earliest tie wins
-    (strict ``>`` at :272-274). Total order → deterministic row."""
-    return (
-        kept.orderBy(F.col("min_executor_pod").desc(), F.col("seq").asc())
-        .select("query_id", "min_executor_pod")
-        .limit(1)
+def argmax_order(keep: Column | None = None) -> Column:
+    """G4's ordering key for ``max_by``: highest pod demand, then the
+    earliest ``seq`` (strict ``>`` at :272-274). ``~seq`` reverses the
+    order without the overflow ``-seq`` has at the minimum long."""
+    return _where(
+        F.struct(F.col("min_executor_pod"), F.bitwise_not(F.col("seq"))), keep
     )
+
+
+def argmax_query(kept: DataFrame) -> DataFrame:
+    """G4: query id with the highest pod demand, earliest tie wins.
+    Total order → deterministic row; no row on empty input."""
+    top = F.max_by(F.struct("query_id", "min_executor_pod"), argmax_order())
+    return kept.agg(top.alias("top")).filter(F.col("top").isNotNull()).select("top.*")
+
+
+# G5 dimension → the label column counted for it (:294-298)
+MATRIX_LABELS = {
+    "count": "recommended_tsize",
+    "cache": "tsize_cache",
+    "mem": "tsize_mem",
+    "cpu": "tsize_cpu",
+    "spill": "tsize_spill",
+}
+# every label tsize_expr can emit; None is past the last bucket
+MATRIX_SIZES: list[str | None] = [*SIZE_ORDER, None]
+
+
+def matrix_cell(dim: str, size: str | None) -> str:
+    return f"n_{dim}_{size or 'none'}"
+
+
+def matrix_cells(keep: Column | None = None) -> list[Column]:
+    """G5 as one count per (dimension, size) cell over the rows where
+    ``keep`` holds — shared by :func:`size_matrix` and the fused report
+    pass."""
+    cells = []
+    for dim, label in MATRIX_LABELS.items():
+        tsize = F.col(label)
+        for size in MATRIX_SIZES:
+            hit = tsize.isNull() if size is None else tsize == size
+            cells.append(
+                F.count_if(hit if keep is None else keep & hit).alias(
+                    matrix_cell(dim, size)
+                )
+            )
+    return cells
 
 
 def size_matrix(classified_kept: DataFrame) -> DataFrame:
     """G5: the size × dimension count matrix, long form.
 
     The reference increments 5 counters per row into
-    ``size_matrix[size][dim]`` (:294-298). Here: unpivot the five label
-    columns → group → count. One shuffle over a ≤ 5×6 key space; AQE
-    coalesces it to nothing at any scale.
+    ``size_matrix[size][dim]`` (:294-298). Here: one global aggregate of
+    the 30 cell counts, unpivoted to ``(dim, tsize, n)`` rows for the
+    non-empty cells — no shuffle of data rows at any scale.
     """
-    long = classified_kept.selectExpr(
-        "stack(5, "
-        "'count', recommended_tsize, "
-        "'cache', tsize_cache, "
-        "'mem', tsize_mem, "
-        "'cpu', tsize_cpu, "
-        "'spill', tsize_spill) AS (dim, tsize)"
+    cells = F.inline(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(dim).alias("dim"),
+                    F.lit(size).cast("string").alias("tsize"),
+                    F.col(matrix_cell(dim, size)).alias("n"),
+                )
+                for dim in MATRIX_LABELS
+                for size in MATRIX_SIZES
+            ]
+        )
     )
-    return (
-        long.groupBy("dim", "tsize")
-        .agg(F.count("*").alias("n"))
-    )
+    return classified_kept.agg(*matrix_cells()).select(cells).filter(F.col("n") > 0)
 
 
 def size_matrix_sql(params: SizingParams) -> str:
@@ -151,28 +220,30 @@ SELECT dim, tsize, COUNT(*) AS n FROM long GROUP BY dim, tsize
 """
 
 
+def utilization_cols(params: SizingParams) -> list[Column]:
+    """G7 as select columns over a row holding the summary columns —
+    shared by :func:`utilization` and the fused report pass."""
+    from ..functions import round2
+
+    denom = F.col("min_executor_pod_workload") * F.col("total_query_time")
+
+    def pct(util: str, per_node: float) -> Column:
+        return round2(100 * F.col(util) / (denom * per_node))
+
+    return [
+        pct("util_cache", params.cache_gb_per_node).alias("cache_util_pct"),
+        pct("util_mem", params.query_mem_per_node).alias("mem_util_pct"),
+        pct("util_cpu", params.vcores_per_node).alias("cpu_util_pct"),
+        pct("util_spill", params.scratch_gb_per_node).alias("spill_util_pct"),
+    ]
+
+
 def utilization(summary: DataFrame, params: SizingParams) -> DataFrame:
     """G7: average cluster-utilization percentages
     (``impala_query_sizing.py:449-453``). Pure arithmetic over the
     single-row summary; rounding matches the reference's ``round(_, 2)``
     via the deterministic round2 twin."""
-    from ..functions import round2
-
-    denom = F.col("min_executor_pod_workload") * F.col("total_query_time")
-    return summary.select(
-        round2(100 * F.col("util_cache") / (denom * params.cache_gb_per_node)).alias(
-            "cache_util_pct"
-        ),
-        round2(100 * F.col("util_mem") / (denom * params.query_mem_per_node)).alias(
-            "mem_util_pct"
-        ),
-        round2(100 * F.col("util_cpu") / (denom * params.vcores_per_node)).alias(
-            "cpu_util_pct"
-        ),
-        round2(100 * F.col("util_spill") / (denom * params.scratch_gb_per_node)).alias(
-            "spill_util_pct"
-        ),
-    )
+    return summary.select(*utilization_cols(params))
 
 
 def utilization_sql(params: SizingParams) -> str:

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import SizingParams
@@ -48,11 +48,16 @@ def skip_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
 
 
+def pruned_condition(params: SizingParams) -> Column:
+    """D3's predicate: pod demand over the limit."""
+    return F.col("min_executor_pod") > params.pod_limit
+
+
 def prune_split(derived: DataFrame, params: SizingParams) -> tuple[DataFrame, DataFrame]:
     """D3: (kept, pruned) on the derived table. Pruned rows still count in
     ``total_queries`` (increment at :215 precedes the prune at :262) but
     feed no aggregate, event, or report."""
-    pruned_cond = F.col("min_executor_pod") > params.pod_limit
+    pruned_cond = pruned_condition(params)
     return derived.filter(~pruned_cond), derived.filter(pruned_cond)
 
 
@@ -64,14 +69,15 @@ class RoutedPlan:
     skipped: DataFrame   # D1 diversions
     kept: DataFrame      # derived, within pod limit → aggregates + sweep
     pruned: DataFrame    # derived, over pod limit → pruned sink only
-    derived: DataFrame | None = None  # the cached pre-prune derived table
+    derived: DataFrame   # the cached pre-prune table derive_fn built
     # (row-for-row with ``accepted``; G1 counts read it to stay on the
     # cache instead of re-deriving the source)
 
 
 def route(df: DataFrame, params: SizingParams, derive_fn) -> RoutedPlan:
-    """Full D1→D2→derive→D3 fan-out. ``derive_fn`` is
-    ``operators.derive.derive`` (injected to avoid an import cycle)."""
+    """Full D1→D2→derive→D3 fan-out. ``derive_fn(df, params)`` builds the
+    table to cache — the pipeline passes derive then classify (injected
+    to avoid an import cycle)."""
     filtered = accepted_filter(df, params)
     with_metrics, skipped = skip_split(filtered)
     # cached for the kept/pruned fan-out + downstream aggregates;

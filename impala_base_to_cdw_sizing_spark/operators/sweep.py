@@ -74,6 +74,26 @@ _RAW_MEASURES: dict[str, str] = {
 }
 
 
+# event timestamps: start events are admission-adjusted (C14), ends raw
+def _start_ts() -> Column:
+    return F.col("start_ms") + F.col("admission_wait")
+
+
+def _end_ts() -> Column:
+    return F.col("end_ms")
+
+
+def event_bounds(keep: Column | None = None) -> list[Column]:
+    """Aggregate columns ``ts_lo``/``ts_hi``: the min and max event
+    ``ts_ms`` :func:`explode_events` would emit for the rows where
+    ``keep`` holds — the bucket bounds :func:`running_sums` takes, read
+    in the same pass as the other report aggregates."""
+    lo, hi = F.least(_start_ts(), _end_ts()), F.greatest(_start_ts(), _end_ts())
+    if keep is not None:
+        lo, hi = F.when(keep, lo), F.when(keep, hi)
+    return [F.min(lo).alias("ts_lo"), F.max(hi).alias("ts_hi")]
+
+
 def explode_events(kept: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
     """F1: one row per interval endpoint; measures signed, micro-quantized.
 
@@ -84,12 +104,12 @@ def explode_events(kept: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
         {f"{m}_u": _micro(F.expr(expr)) for m, expr in _RAW_MEASURES.items()}
     )
     start = F.struct(
-        (F.col("start_ms") + F.col("admission_wait")).alias("ts_ms"),
+        _start_ts().alias("ts_ms"),
         F.lit(1).alias("sign"),
         *[F.col(f"{m}_u").alias(f"{m}_u") for m in MEASURES],
     )
     end = F.struct(
-        F.col("end_ms").alias("ts_ms"),
+        _end_ts().alias("ts_ms"),
         F.lit(-1).alias("sign"),
         *[(-F.col(f"{m}_u")).alias(f"{m}_u") for m in MEASURES],
     )
@@ -119,11 +139,19 @@ sweep_events AS (
 
 
 def running_sums(
-    events: DataFrame, segmented: bool = False, n_buckets: int = 64
+    events: DataFrame,
+    segmented: bool = False,
+    n_buckets: int = 64,
+    bounds: tuple[int | None, int | None] | None = None,
 ) -> DataFrame:
     """F2+F3: exact global running sums over the (ts_ms, seq, sign DESC)
     total order. ``segmented=True`` is the 100 TB plan: parallel
-    per-bucket windows + broadcast carry-in, bit-identical results."""
+    per-bucket windows + broadcast carry-in, bit-identical results.
+
+    ``bounds`` is the events' ``(min, max)`` ``ts_ms`` when the caller
+    already has it (:func:`event_bounds`); without it the segmented plan
+    runs one eager job to find it. Any bounds give the same output —
+    they only place the bucket edges."""
     order = [F.col("ts_ms").asc(), F.col("seq").asc(), F.col("sign").desc()]
     out_cols = ["seq", "ts_ms", "sign"]
 
@@ -147,12 +175,14 @@ def running_sums(
         return events.select(*out_cols, *_emit_run(run_micro, run_queries, pos))
 
     # --- segmented exact sweep (the scale path) ---
-    # The min/max agg is an eager action: without the cache it executes
-    # the whole upstream pipeline once for the bucket bounds, and the
-    # local / totals branches below re-execute it twice more. Events are
-    # 2 rows × a handful of longs per query — the natural materialization.
-    events = events.cache()
-    lo, hi = events.agg(F.min("ts_ms"), F.max("ts_ms")).first()
+    if bounds is None:
+        # The min/max agg is an eager action: without the cache it executes
+        # the whole upstream pipeline once for the bucket bounds, and the
+        # local / totals branches below re-execute it twice more. Events are
+        # 2 rows × a handful of longs per query — the natural materialization.
+        events = events.cache()
+        bounds = events.agg(F.min("ts_ms"), F.max("ts_ms")).first()
+    lo, hi = bounds
     if lo is None:  # empty input: any constant bucketing is exact
         lo, hi = 0, 0
     span = max(1, (hi - lo) // n_buckets + 1)

@@ -2,9 +2,12 @@
 SURVEY.md §3): ingest → derive → classify → route → aggregate → sweep →
 report values.
 
-One cached derived DataFrame fans out to all branches — the derive block
-runs once, every downstream branch is a filter/aggregate over it
-(mirrors the reference's single row loop feeding multiple sinks).
+:func:`run_sizing` caches one table, the classified derived rows, and
+issues no job: every branch is a lazy filter, aggregate or sweep over
+that table, built when something reads it (mirrors the reference's
+single row loop feeding multiple sinks). The CLI reads it with two report
+actions (:func:`..plans.reports.collect_report_values`) and the sink
+writes.
 """
 
 from __future__ import annotations
@@ -23,15 +26,38 @@ from ..operators.sweep import explode_events, running_sums, sweep_maxima
 
 @dataclass
 class SizingResult:
-    routed: RoutedPlan
-    classified_kept: DataFrame
-    summary: DataFrame          # single row: G1-G3, G6, G8
-    argmax: DataFrame           # single row: G4
-    matrix: DataFrame           # long-form size × dim counts (G5)
-    utilization: DataFrame      # single row: G7
-    sweep_running: DataFrame    # per-event running sums (F1-F3)
-    sweep_maxima: DataFrame     # single row (F4)
-    sweep_events: DataFrame | None = None  # cached explode; unpersist when done
+    """The routed plan plus lazy views over its cached table; reading a
+    view builds its frame and runs nothing."""
+
+    routed: RoutedPlan  # kept/pruned carry the t-shirt labels
+    params: SizingParams
+    segmented_sweep: bool = True
+
+    @property
+    def summary(self) -> DataFrame:  # single row: G1-G3, G6, G8
+        return summarize(self.routed.kept, self.routed.derived)
+
+    @property
+    def argmax(self) -> DataFrame:  # single row: G4
+        return argmax_query(self.routed.kept)
+
+    @property
+    def matrix(self) -> DataFrame:  # long-form size × dim counts (G5)
+        return size_matrix(self.routed.kept)
+
+    @property
+    def utilization(self) -> DataFrame:  # single row: G7
+        return utilization(self.summary, self.params)
+
+    def maxima(self, bounds: tuple[int | None, int | None]) -> DataFrame:
+        """Single row (F4) over the per-event running sums (F1-F3);
+        ``bounds`` is the events' ``(min, max)`` ``ts_ms``
+        (``operators.sweep.event_bounds``), so the sweep runs no bounds
+        job of its own."""
+        events = explode_events(self.routed.kept)
+        return sweep_maxima(
+            running_sums(events, segmented=self.segmented_sweep, bounds=bounds)
+        )
 
 
 def prepare_query_history(flat: DataFrame) -> DataFrame:
@@ -96,25 +122,5 @@ def run_sizing(
     params: SizingParams,
     segmented_sweep: bool = True,
 ) -> SizingResult:
-    routed = route(query_history, params, derive)
-    classified_kept = classify(routed.kept)
-    # G1 counts the cached derived table (row-equal to accepted) so the
-    # count doesn't re-derive from source; the 1-row summary is itself
-    # cached because three consumers read it (reports, utilization,
-    # workload-size lookup)
-    summary = summarize(routed.kept, routed.derived).cache()
-    # events feed both the running-sums output and the maxima (and, when
-    # segmented, the quantile pass) — cache so the explode runs once
-    events = explode_events(routed.kept).cache()
-    running = running_sums(events, segmented=segmented_sweep)
-    return SizingResult(
-        routed=routed,
-        classified_kept=classified_kept,
-        summary=summary,
-        argmax=argmax_query(routed.kept),
-        matrix=size_matrix(classified_kept),
-        utilization=utilization(summary, params),
-        sweep_running=running,
-        sweep_maxima=sweep_maxima(running),
-        sweep_events=events,
-    )
+    routed = route(query_history, params, lambda df, p: classify(derive(df, p)))
+    return SizingResult(routed, params, segmented_sweep)

@@ -12,11 +12,27 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
 from ..config import SizingParams
+from ..functions import ceil_long, round2
+from ..operators.aggregates import (
+    MATRIX_LABELS,
+    argmax_order,
+    matrix_cell,
+    matrix_cells,
+    pools_agg,
+    summary_aggs,
+    utilization_cols,
+)
+from ..operators.classify import tsize_expr
+from ..operators.route import prune_split, pruned_condition
+from ..operators.sweep import event_bounds, explode_events, running_sums, sweep_maxima
 from ..schemas import SIZE_ORDER
 from .pipeline import SizingResult
 
-DIM_ORDER = ["count", "cache", "mem", "cpu", "spill"]
+DIM_ORDER = list(MATRIX_LABELS)
 CONSTRAINT_DIMS = ["cache", "mem", "cpu", "spill"]
 
 
@@ -29,163 +45,124 @@ class ReportValues:
     utilization: dict[str, float] = field(default_factory=dict)  # H5
 
 
+def report_aggregate(classified: DataFrame, params: SizingParams) -> DataFrame:
+    """Every report value that is an aggregate of the classified pre-prune
+    table, as ONE row from ONE global aggregate: G1-G8 (kept rows only,
+    G1 over all), the prune count, the sorted pools, the argmax query
+    (G4), the size-matrix cells (G5), ``tsize_workload`` and
+    ``constrained_by`` (H3), utilization (G7), and the event-time bounds
+    the sweep buckets on (``ts_lo``/``ts_hi``).
+
+    The expressions are the operators' own (``summary_aggs``,
+    ``matrix_cells``, ``utilization_cols``, ``event_bounds``), each
+    restricted to the kept rows; only the sweep maxima need a second
+    pass. ``constrained_by`` is the canonical-dim-order string (SURVEY
+    §7.0 declared fix: the reference iterates a set literal at :431,
+    which is nondeterministic across Python runs); absent dims are
+    skipped by ``concat_ws``, so "no dimension constrained" is the empty
+    string.
+    """
+    pruned = pruned_condition(params)
+    keep = ~pruned
+    agg = classified.agg(
+        F.count("*").alias("total_queries"),
+        *summary_aggs(keep),
+        pools_agg(keep),
+        F.count_if(pruned).alias("prune_count"),
+        F.max_by(F.col("query_id"), argmax_order(keep)).alias(
+            "highest_resources_query_id"
+        ),
+        *matrix_cells(keep),
+        *event_bounds(keep),
+    )
+    tsize = F.col("tsize_workload")
+
+    def constrained(dim: str):
+        n = F.coalesce(
+            *[F.when(tsize == size, F.col(matrix_cell(dim, size))) for size in SIZE_ORDER]
+        )
+        return F.when(n > 0, F.lit(dim))
+
+    # tsize_workload in its own step: the twenty cell lookups read the
+    # column instead of each repeating the CASE chain
+    return agg.withColumn(
+        "tsize_workload", tsize_expr(F.col("min_executor_pod_workload"))
+    ).select(
+        "*",
+        F.concat_ws(" ", *[constrained(d) for d in CONSTRAINT_DIMS]).alias(
+            "constrained_by"
+        ),
+        *utilization_cols(params),
+    )
+
+
 def collect_report_values(
     result: SizingResult, params: SizingParams
 ) -> ReportValues:
-    """One driver-side pass over the tiny aggregate DataFrames.
-
-    The seven aggregate reads are INDEPENDENT jobs over shared cached
-    inputs, so after one sequential action materializes the shared
-    caches (``summary.collect()`` forces the derived table and the
-    1-row summary) the rest are submitted from a small thread pool
-    (optimization guide §2.6: actions are only sequential because the
-    driver calls them sequentially — concurrent tiny jobs back-fill
-    idle executors instead of paying seven scheduling latencies end to
-    end). Results are identical: every job is a read of a deterministic
-    frame; the only ordering requirement is cache materialization
-    before fan-out, which the summary collect provides."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.sql import functions as F
-
-    from ..operators.classify import tsize_expr
-
-    # sequential: materializes the cached derived table + 1-row summary
-    # that four of the concurrent jobs below re-read
-    summary = result.summary.collect()[0].asDict()
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_argmax = pool.submit(result.argmax.collect)
-        # the heaviest job: explode + running sums + maxima (also
-        # materializes the shared events cache — sole toucher here)
-        f_maxima = pool.submit(result.sweep_maxima.collect)
-        f_util = pool.submit(result.utilization.collect)
-        f_matrix = pool.submit(result.matrix.collect)
-        f_pools = pool.submit(
-            result.routed.kept.select("pool").distinct().collect
-        )
-        f_prune = pool.submit(result.routed.pruned.count)
-        argmax = f_argmax.result()
-        maxima = f_maxima.result()[0].asDict()
-        util = f_util.result()[0].asDict()
-        matrix = {
-            (r.dim, r.tsize): r.n for r in f_matrix.result() if r.tsize is not None
-        }
-        pools = sorted(r.pool for r in f_pools.result())
-        prune_count = f_prune.result()
-
-    counts = {
-        size: {dim: int(matrix.get((dim, size), 0)) for dim in DIM_ORDER}
-        for size in SIZE_ORDER
-    }
-
-    workload_pods = summary["min_executor_pod_workload"]
-    tsize_workload = (
-        result.summary.select(
-            tsize_expr(F.col("min_executor_pod_workload")).alias("t")
-        ).collect()[0].t
-    )
-    constrained_by = [
-        d for d in CONSTRAINT_DIMS if counts.get(tsize_workload, {}).get(d, 0) > 0
-    ]
+    """The five report sections from two actions over the run's cached
+    table: :func:`report_aggregate` (which also materializes the cache),
+    then the sweep maxima, bucketed on the bounds the first action read —
+    so the sweep issues no bounds job of its own."""
+    agg = report_aggregate(result.routed.derived, params).collect()[0]
+    maxima = result.maxima((agg.ts_lo, agg.ts_hi)).collect()[0]
+    total_time = agg.total_query_time
 
     return ReportValues(
         individual={
-            "total_queries": summary["total_queries"],
-            "total_query_time_sec": round(summary["total_query_time"], 2),
-            "highest_resources_query_id": argmax[0].query_id if argmax else None,
-            "max_nodes": summary["max_backends"],
-            "max_cores_per_node": summary["max_vcores"],
-            "max_data_per_node_gb": summary["max_data"],
-            "max_spill_per_node_gb": summary["max_spill"],
-            "max_memory_per_node_gb": summary["max_mem"],
-            "max_data_rate": summary["max_data_rate"],
-            "pools": pools,
-            "prune_count": prune_count,
+            "total_queries": agg.total_queries,
+            "total_query_time_sec": None if total_time is None else round(total_time, 2),
+            "highest_resources_query_id": agg.highest_resources_query_id,
+            "max_nodes": agg.max_backends,
+            "max_cores_per_node": agg.max_vcores,
+            "max_data_per_node_gb": agg.max_data,
+            "max_spill_per_node_gb": agg.max_spill,
+            "max_memory_per_node_gb": agg.max_mem,
+            "max_data_rate": agg.max_data_rate,
+            "pools": agg.pools,
+            "prune_count": agg.prune_count,
             "pod_limit": params.pod_limit,
         },
         concurrent={
-            "max_concurrent_queries": maxima["max_concurrent_queries"],
-            "max_concurrent_resources_ts_ms": maxima["max_pods_workload_ts_ms"],
-            "max_concurrent_cores": maxima["max_concurrent_cores"],
-            "max_concurrent_data_gb": round(maxima["max_concurrent_cache"] or 0, 2),
-            "max_concurrent_spill_gb": round(maxima["max_concurrent_spill"] or 0, 2),
-            "max_concurrent_memory_gb": round(maxima["max_concurrent_memory"] or 0, 2),
-            "max_concurrent_data_rate": maxima["max_concurrent_data_rate"],
+            "max_concurrent_queries": maxima.max_concurrent_queries,
+            "max_concurrent_resources_ts_ms": maxima.max_pods_workload_ts_ms,
+            "max_concurrent_cores": maxima.max_concurrent_cores,
+            "max_concurrent_data_gb": round(maxima.max_concurrent_cache or 0, 2),
+            "max_concurrent_spill_gb": round(maxima.max_concurrent_spill or 0, 2),
+            "max_concurrent_memory_gb": round(maxima.max_concurrent_memory or 0, 2),
+            "max_concurrent_data_rate": maxima.max_concurrent_data_rate,
         },
         cluster_sizing={
-            "tsize_workload": tsize_workload,
-            "min_pods": workload_pods,
-            "max_pods": int(-(-(maxima["max_pods_workload"] or 0) // 1)),
-            "constrained_by": constrained_by,
+            "tsize_workload": agg.tsize_workload,
+            "min_pods": agg.min_executor_pod_workload,
+            "max_pods": int(-(-(maxima.max_pods_workload or 0) // 1)),
+            "constrained_by": agg.constrained_by.split(),
         },
-        query_counts=counts,
+        query_counts={
+            size: {dim: agg[matrix_cell(dim, size)] for dim in DIM_ORDER}
+            for size in SIZE_ORDER
+        },
         utilization={
-            "cache_util_pct": util["cache_util_pct"],
-            "mem_util_pct": util["mem_util_pct"],
-            "cpu_util_pct": util["cpu_util_pct"],
-            "spill_util_pct": util["spill_util_pct"],
+            "cache_util_pct": agg.cache_util_pct,
+            "mem_util_pct": agg.mem_util_pct,
+            "cpu_util_pct": agg.cpu_util_pct,
+            "spill_util_pct": agg.spill_util_pct,
         },
     )
 
 
-def report_values_df(kept, accepted, pruned, params: SizingParams):
+def report_values_df(classified: DataFrame, params: SizingParams) -> DataFrame:
     """The five report sections (H1-H5 + G9) as ONE oracle-checkable row
     (``impala_query_sizing.py:399-458``; ``constrained_by`` :428-437).
 
     :func:`collect_report_values` collects the same numbers driver-side
-    to render text; this is the declared-tier twin — every value is a
-    column of a single-row DataFrame so the DuckDB oracle can hash it.
-    All inputs are one-row aggregate frames (or the ≤30-row size matrix),
-    composed with broadcast cross joins — no shuffle grows with data.
-
-    ``constrained_by`` is the canonical-dim-order string (SURVEY §7.0
-    declared fix: the reference iterates a set literal at :431, which is
-    nondeterministic across Python runs); absent dims are skipped by
-    ``concat_ws``, so "no dimension constrained" is the empty string in
-    both engines. Rounding uses the deterministic ``round2`` twin.
+    to render text; this is the declared-tier twin — the same
+    :func:`report_aggregate` row broadcast-joined to the sweep maxima,
+    with every value a column so the DuckDB oracle can hash it. Rounding
+    uses the deterministic ``round2`` twin.
     """
-    from pyspark.sql import functions as F
-
-    from ..functions import ceil_long, round2
-    from ..operators.aggregates import size_matrix, summarize, utilization
-    from ..operators.classify import tsize_expr
-    from ..operators.sweep import explode_events, running_sums, sweep_maxima
-
-    summary = summarize(kept, accepted)
+    kept, _ = prune_split(classified, params)
     maxima = sweep_maxima(running_sums(explode_events(kept), segmented=True))
-    util = utilization(summary, params)
-    # G4 as a global aggregate (1 row even on empty input, like the
-    # oracle's scalar subquery): max pod, earliest seq wins ties.
-    argmax = kept.agg(
-        F.max_by(
-            F.col("query_id"), F.struct(F.col("min_executor_pod"), -F.col("seq"))
-        ).alias("highest_resources_query_id")
-    )
-    prune = pruned.agg(F.count("*").alias("prune_count"))
-    tsz = summary.select(
-        tsize_expr(F.col("min_executor_pod_workload")).alias("tsize_workload")
-    )
-    constrained = (
-        size_matrix(kept)
-        .join(F.broadcast(tsz), F.col("tsize") == F.col("tsize_workload"))
-        .agg(
-            F.concat_ws(
-                " ",
-                *[
-                    F.max(F.when((F.col("dim") == d) & (F.col("n") > 0), F.lit(d)))
-                    for d in CONSTRAINT_DIMS
-                ],
-            ).alias("constrained_by")
-        )
-    )
-    row = (
-        summary.crossJoin(F.broadcast(argmax))
-        .crossJoin(F.broadcast(prune))
-        .crossJoin(F.broadcast(maxima))
-        .crossJoin(F.broadcast(util))
-        .crossJoin(F.broadcast(tsz))
-        .crossJoin(F.broadcast(constrained))
-    )
+    row = report_aggregate(classified, params).crossJoin(F.broadcast(maxima))
     z = F.lit(0.0)
     return row.select(
         F.col("total_queries"),

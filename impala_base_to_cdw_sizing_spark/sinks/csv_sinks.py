@@ -4,7 +4,7 @@
   ``continue``d before the main write, ``impala_query_sizing.py:262-269``
   vs ``:336``).
 - B2 pruned CSV: lazily created — the reference only opens the file on the
-  first pruned row (``:263-266``); mirrored by checking emptiness first.
+  first pruned row (``:263-266``); mirrored by the caller's prune count.
 - B3 skipped list: ``id|duration|start|end|state``-style pipe-joined lines
   (``:198,341-344``).
 
@@ -63,20 +63,20 @@ def write_sizing_outputs(
     main_path: str,
     pruned_path: str,
     skipped_path: str,
-) -> dict[str, int]:
-    """Write the three sinks; returns per-sink row counts.
+    prune_count: int,
+) -> None:
+    """Write the three sinks: one write job each, and none for the pruned
+    sink when ``prune_count`` (the caller's count of ``pruned``) is 0.
 
     ``kept``/``pruned`` must already carry ``output_cols`` (the 24-column
     contract); ``skipped`` needs query_id/duration_millis/start_ms/end_ms.
     """
-    kept_out = kept.select(*output_cols)
-    write_csv(kept_out, main_path)
+    write_csv(kept.select(*output_cols), main_path)
 
-    prune_count = pruned.count()
     if prune_count > 0:  # lazy-open mirror of :263-266
         write_csv(pruned.select(*output_cols), pruned_path)
 
-    skipped_lines = skipped.select(
+    skipped.select(
         F.concat_ws(
             "|",
             F.col("query_id"),
@@ -84,11 +84,4 @@ def write_sizing_outputs(
             F.col("start_ms").cast("string"),
             F.col("end_ms").cast("string"),
         ).alias("value")
-    )
-    skipped_lines.write.mode("overwrite").text(skipped_path)
-
-    return {
-        "kept": kept_out.count(),
-        "pruned": prune_count,
-        "skipped": skipped_lines.count(),
-    }
+    ).write.mode("overwrite").text(skipped_path)

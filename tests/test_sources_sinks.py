@@ -104,21 +104,35 @@ def test_api_load_and_flatten_skip_route(spark):
     assert rows["api-1"].num_backends == 4
 
 
+def _data_rows(path: Path, header: bool) -> int:
+    """Data lines in a Spark output directory's part files."""
+    return sum(
+        max(0, len(p.read_text().splitlines()) - int(header))
+        for p in path.glob("part-*")
+    )
+
+
 def test_sizing_sinks(spark, tmp_path: Path):
     qh = query_history_from_events(spark, SF_SMALL)
     res = run_sizing(qh, DEFAULT_PARAMS)
-    from impala_base_to_cdw_sizing_spark.operators.classify import classify
-
-    counts = write_sizing_outputs(
-        kept=res.classified_kept,
-        pruned=classify(res.routed.pruned),
+    prune_count = collect_report_values(res, DEFAULT_PARAMS).individual["prune_count"]
+    write_sizing_outputs(
+        kept=res.routed.kept,
+        pruned=res.routed.pruned,
         skipped=res.routed.skipped,
         output_cols=["query_id", "pool", "min_executor_pod", "recommended_tsize"],
         main_path=str(tmp_path / "main"),
         pruned_path=str(tmp_path / "pruned"),
         skipped_path=str(tmp_path / "skipped"),
+        prune_count=prune_count,
     )
-    assert counts["kept"] > 0 and counts["skipped"] > 0
+    # the files hold exactly the routed rows
+    kept_n = _data_rows(tmp_path / "main", header=True)
+    skipped_n = _data_rows(tmp_path / "skipped", header=False)
+    assert kept_n == res.routed.kept.count() > 0
+    assert skipped_n == res.routed.skipped.count() > 0
+    assert _data_rows(tmp_path / "pruned", header=True) == prune_count
+    assert prune_count == res.routed.pruned.count()
     main_files = list((tmp_path / "main").glob("*.csv"))
     assert main_files, "main CSV parts written"
     header = main_files[0].read_text().splitlines()[0]
@@ -128,7 +142,7 @@ def test_sizing_sinks(spark, tmp_path: Path):
     )
     assert skipped_line.count("|") == 3  # id|duration|start|end
     # lazy prune sink: dir exists iff pruned rows exist
-    assert (tmp_path / "pruned").exists() == (counts["pruned"] > 0)
+    assert (tmp_path / "pruned").exists() == (prune_count > 0)
 
 
 def test_report_values_and_render(spark):

@@ -7,7 +7,7 @@ pipeline + ``write_sizing_outputs`` (main/pruned/skipped) + reports —
 against a real on-disk sink directory and prints ONE JSON line with the
 wall time, per-sink row counts, and per-sink part-file counts (the
 distributed-layout witness: one directory of part files, not one
-serialized file).
+serialized file). Row counts are read back from the written part files.
 
 Usage: SPARK_GRAFT_SF_DIR=... python tools/ep2_bench.py [outdir]
 Run at two sfs and feed the totals to tools/scaling_report.py.
@@ -29,7 +29,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 def run_ep2_with_sinks(spark, sf_dir: str, out_dir: str) -> dict:
     from impala_base_to_cdw_sizing_spark.__main__ import _project24
     from impala_base_to_cdw_sizing_spark.config import DEFAULT_PARAMS
-    from impala_base_to_cdw_sizing_spark.operators.classify import classify
     from impala_base_to_cdw_sizing_spark.plans.pipeline import run_sizing
     from impala_base_to_cdw_sizing_spark.plans.reports import collect_report_values
     from impala_base_to_cdw_sizing_spark.schemas import OUTPUT_FIELDS
@@ -59,37 +58,40 @@ def run_ep2_with_sinks(spark, sf_dir: str, out_dir: str) -> dict:
         "pruned": f"{out_dir}/sizing.csv.pruned",
         "skipped": f"{out_dir}/sizing.csv.skipped",
     }
-    counts = write_sizing_outputs(
-        kept=_project24(_with_times(classify(res.routed.kept))),
-        pruned=_project24(_with_times(classify(res.routed.pruned))),
-        skipped=res.routed.skipped.withColumns(
-            {"start_ms": F.col("start_ms"), "end_ms": F.col("end_ms")}
-        ),
+    # the CLI's order: report actions first, then the sinks
+    values = collect_report_values(res, DEFAULT_PARAMS)
+    write_sizing_outputs(
+        kept=_project24(_with_times(res.routed.kept)),
+        pruned=_project24(_with_times(res.routed.pruned)),
+        skipped=res.routed.skipped,
         output_cols=OUTPUT_FIELDS,
         main_path=paths["kept"],
         pruned_path=paths["pruned"],
         skipped_path=paths["skipped"],
+        prune_count=values.individual["prune_count"],
     )
-    collect_report_values(res, DEFAULT_PARAMS)
     elapsed = round(time.perf_counter() - t0, 3)
-    if res.routed.derived is not None:
-        res.routed.derived.unpersist()
-    res.summary.unpersist()
-    if res.sweep_events is not None:
-        res.sweep_events.unpersist()
+    res.routed.derived.unpersist()
 
-    def _parts(p: str) -> int:
+    def _parts(p: str) -> list[Path]:
         d = Path(p)
-        if not d.exists():
-            return -1  # lazy sink never opened (the B2 contract)
-        return sum(1 for f in d.iterdir() if f.name.startswith("part-"))
+        return sorted(d.glob("part-*")) if d.exists() else []
+
+    def _rows(p: str, header: bool) -> int:
+        # data lines in the written part files (one header line per part)
+        return sum(
+            max(0, f.read_bytes().count(b"\n") - int(header)) for f in _parts(p)
+        )
 
     return {
         "metric": "ep2_with_sinks",
         "value": elapsed,
         "unit": "sec",
-        "rows": counts,
-        "part_files": {k: _parts(v) for k, v in paths.items()},
+        "rows": {k: _rows(v, header=k != "skipped") for k, v in paths.items()},
+        # -1: lazy sink never opened (the B2 contract)
+        "part_files": {
+            k: len(_parts(v)) if Path(v).exists() else -1 for k, v in paths.items()
+        },
         "sf": float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0,
     }
 
