@@ -18,11 +18,13 @@ from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from impala_base_to_cdw_sizing_spark.sources.files import (  # noqa: E402
     _FANOUT_MIN_ROWS,
+    ROWS_PER_TASK_COLLAPSING,
     ROWS_PER_TASK_HEAVY,
     ROWS_PER_TASK_LIGHT,
     _scan_fanout,
@@ -84,6 +86,27 @@ def test_leaves_splittable_tables_alone(spark, tmp_path):
     # not add a shuffle (at scale this is the only branch ever taken)
     _write(tmp_path / "big.parquet", 6400, row_group_size=100)
     assert _scan_fanout(str(tmp_path / "big.parquet"), 32, ROWS_PER_TASK_HEAVY) == 0
+
+
+@pytest.mark.parametrize("cpus", [4, 32])
+@pytest.mark.parametrize(
+    "rows_per_task",
+    [ROWS_PER_TASK_HEAVY, ROWS_PER_TASK_LIGHT, ROWS_PER_TASK_COLLAPSING],
+    ids=["heavy", "light", "collapsing"],
+)
+def test_splittable_input_never_fans_in_any_class(tmp_path, cpus, rows_per_task):
+    """The scale guarantee: an input with at least cpus/2 row groups (any
+    real-scale table) is left alone whatever the consumer's cost class,
+    although the same rows in one row group would fan out for the heavy
+    and light classes."""
+    rows, groups = 20 * ROWS_PER_TASK_LIGHT, cpus // 2
+    _write(tmp_path / "split.parquet", rows, row_group_size=-(-rows // groups))
+    assert pq.ParquetFile(tmp_path / "split.parquet").metadata.num_row_groups == groups
+    assert _scan_fanout(str(tmp_path / "split.parquet"), cpus, rows_per_task) == 0
+    _write(tmp_path / "one.parquet", rows)
+    fan = _scan_fanout(str(tmp_path / "one.parquet"), cpus, rows_per_task)
+    assert fan == min(cpus, rows // rows_per_task)
+    assert (fan > 0) == (rows_per_task != ROWS_PER_TASK_COLLAPSING)
 
 
 def test_unreadable_path_is_left_alone():

@@ -3,28 +3,44 @@ and report assembly."""
 
 from __future__ import annotations
 
+import csv
+import dataclasses
+import math
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from impala_base_to_cdw_sizing_spark.config import DEFAULT_PARAMS
+from impala_base_to_cdw_sizing_spark.operators.classify import classify
+from impala_base_to_cdw_sizing_spark.operators.derive import derive
 from impala_base_to_cdw_sizing_spark.operators.multimodal import (
     decode_media,
     sample_frames,
     with_payload,
 )
-from impala_base_to_cdw_sizing_spark.plans.pipeline import run_sizing
+from impala_base_to_cdw_sizing_spark.operators.route import (
+    accepted_filter,
+    skip_split,
+)
+from impala_base_to_cdw_sizing_spark.plans.pipeline import (
+    prepare_query_history,
+    run_api_sizing,
+    run_sizing,
+)
 from impala_base_to_cdw_sizing_spark.plans.reports import (
     collect_report_values,
     format_reports,
 )
-from impala_base_to_cdw_sizing_spark.schemas import SIZE_ORDER
+from impala_base_to_cdw_sizing_spark.schemas import API_DOC_SCHEMA, SIZE_ORDER
 from impala_base_to_cdw_sizing_spark.sinks import write_sizing_outputs
 from impala_base_to_cdw_sizing_spark.sources.cm_api import (
+    PAGE_SIZE,
     fetch_pages,
     flatten_api_docs,
     load_api_queries,
 )
+from impala_base_to_cdw_sizing_spark.sources.files import read_query_history_csv
 from impala_base_to_cdw_sizing_spark.sources.synthetic import (
     query_history_from_events,
 )
@@ -104,6 +120,97 @@ def test_api_load_and_flatten_skip_route(spark):
     assert rows["api-1"].num_backends == 4
 
 
+def _paged(docs: list[dict]):
+    """A fetcher that pages ``docs`` as the CM API does."""
+    def fetcher(from_date, to_date, pool, offset):
+        return {"queries": docs[offset : offset + PAGE_SIZE], "warnings": []}
+
+    return fetcher
+
+
+def test_api_plan_folds_no_derived_column(spark):
+    """The API path's optimized plan keeps derive and classify above the
+    doc relation: Catalyst's ConvertToLocalRelation would otherwise
+    evaluate every derived column row by row on the driver at plan time
+    and leave the whole chain as one LocalRelation."""
+    docs = load_api_queries(
+        spark, _paged([_doc(i) for i in range(2000)]), "T0", "T1"
+    )
+    qh = prepare_query_history(flatten_api_docs(docs))
+    with_metrics, _ = skip_split(accepted_filter(qh, DEFAULT_PARAMS))
+    plan = (
+        classify(derive(with_metrics, DEFAULT_PARAMS))
+        ._jdf.queryExecution().optimizedPlan()
+    )
+    assert plan.nodeName() != "LocalRelation"
+    leaves = plan.collectLeaves()
+    relations = [
+        leaf for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if leaf.nodeName() == "LocalRelation"
+    ]
+    assert relations
+    for rel in relations:
+        out = rel.output()
+        names = [out.apply(i).name() for i in range(out.size())]
+        assert names == API_DOC_SCHEMA.fieldNames()
+
+
+def _replay_row(doc: dict) -> list:
+    """The replay CSV row of an API doc, converted in Python."""
+    attrs = doc["attributes"]
+
+    def gb(key: str) -> float:
+        return math.floor(int(attrs[key]) / 1024**3 * 100 + 0.5) / 100
+
+    return [
+        doc["queryId"], attrs["pool"], doc["startTime"], doc["endTime"],
+        doc["durationMillis"], gb("hdfs_bytes_read"), gb("memory_aggregate_peak"),
+        gb("memory_spilled"), int(attrs["thread_cpu_time"]) / 1000,
+        doc["queryType"], attrs["admission_wait"], attrs["num_backends"],
+    ]
+
+
+@pytest.mark.parametrize(
+    "docs",
+    [
+        [],
+        [_doc(3)],
+        [_doc(i, with_mem=False) for i in range(1, 6)],
+    ],
+    ids=["no_docs", "one_doc", "all_missing_mem"],
+)
+def test_api_degenerate_inputs_match_replay(spark, tmp_path, docs):
+    """EP1 on an empty, single-doc or all-skipped corpus gives the report
+    the replay path gives on the equivalent CSV (skipped docs never reach
+    a replay export)."""
+    kept = [d for d in docs if "memory_aggregate_peak" in d["attributes"]]
+    history = tmp_path / "history.csv"
+    with history.open("w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow([
+            "query_id", "pool", "start_time", "end_time", "duration_millis",
+            "reqd_cache_gb", "reqd_agg_mem", "memory_spilled_gb",
+            "cpu_time_sec", "query_type", "admission_wait", "num_backends",
+        ])
+        w.writerows(_replay_row(d) for d in kept)
+    api = run_api_sizing(spark, DEFAULT_PARAMS, fetcher=_paged(docs))
+    replay = run_sizing(
+        prepare_query_history(read_query_history_csv(spark, str(history))),
+        DEFAULT_PARAMS,
+    )
+    try:
+        got, want = (
+            dataclasses.asdict(collect_report_values(r, DEFAULT_PARAMS))
+            for r in (api, replay)
+        )
+        assert api.routed.skipped.count() == len(docs) - len(kept)
+    finally:
+        for r in (api, replay):
+            r.routed.derived.unpersist()
+    assert got == want
+    assert got["individual"]["total_queries"] == len(kept)
+
+
 def _data_rows(path: Path, header: bool) -> int:
     """Data lines in a Spark output directory's part files."""
     return sum(
@@ -169,10 +276,6 @@ def test_ep1_api_mode_end_to_end(spark):
         docs = [_doc(i) for i in range(1, 40)]
         docs.append(_doc(99, with_mem=False))  # skip-routed
         return {"queries": docs, "warnings": []}
-
-    from impala_base_to_cdw_sizing_spark.plans.pipeline import (
-        prepare_query_history,
-    )
 
     flat = flatten_api_docs(load_api_queries(spark, fetcher, "T0", "T1"))
     qh = prepare_query_history(flat)

@@ -4,11 +4,20 @@ files (the judge checks plan claims against these, it cannot run Spark).
 
 Usage:
     python tools/capture_plans.py --tag r14 --suffix before [sf_dir] [query ...]
+    python tools/capture_plans.py --api --tag api_barrier --suffix after
 
 With no query names, captures every ``queries()`` entry. Queries that
 are driver-side loops (BPE trainers) still produce a plan: the plan of
 the FINAL returned frame, plus a header noting the loop rounds are
 driver-side (the per-round plan shape is in the operator's docstring).
+
+``--api`` captures the EP1 path instead: the committed API-doc fixture
+(``fixtures/api_docs.parquet``) is paged through an in-process fetcher
+into ``run_api_sizing``, the cached table is built, and its optimized
+logical and formatted physical plans go to
+``plans/<tag>/api_sizing_cached_<suffix>.txt``. Its docs are an
+in-memory relation, so that plan names no input path; in registry plans
+the parent of ``sf_dir`` is shown as ``<testdata>``.
 """
 
 from __future__ import annotations
@@ -26,28 +35,65 @@ def _arg(flag: str, default: str) -> str:
     return default
 
 
+REPO = Path(__file__).resolve().parent.parent
+
+
+def _explain(df, mode: str) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
+
+
+def _capture_api(spark, out_dir: Path, suffix: str) -> int:
+    """The EP1 path's cached table over the API-doc fixture."""
+    import pyarrow.parquet as pq
+
+    from impala_base_to_cdw_sizing_spark.config import DEFAULT_PARAMS
+    from impala_base_to_cdw_sizing_spark.operators.api_flatten import FIXTURE
+    from impala_base_to_cdw_sizing_spark.plans.pipeline import run_api_sizing
+    from impala_base_to_cdw_sizing_spark.sources.cm_api import PAGE_SIZE
+
+    docs = pq.read_table(FIXTURE).to_pylist()
+
+    def fetcher(from_date, to_date, pool, offset):
+        return {"queries": docs[offset : offset + PAGE_SIZE], "warnings": []}
+
+    cached = run_api_sizing(spark, DEFAULT_PARAMS, fetcher=fetcher).routed.derived
+    cached.count()  # build the cache so the adaptive plan is final
+    optimized = cached._jdf.queryExecution().optimizedPlan().toString()
+    name = f"api_sizing_cached_{suffix}.txt"
+    (out_dir / name).write_text(
+        "== Optimized Logical Plan ==\n" + optimized + "\n\n" + _explain(cached, "formatted")
+    )
+    print(f"OK api_sizing_cached -> plans/{out_dir.name}/{name}")
+    return 0
+
+
 def main() -> int:
     argv = [a for a in sys.argv[1:]]
     tag = _arg("--tag", "r14")
     suffix = _arg("--suffix", "before")
+    api = "--api" in argv
     # strip consumed flag pairs
     for flag in ("--tag", "--suffix"):
         if flag in argv:
             i = argv.index(flag)
             del argv[i : i + 2]
+    if api:
+        argv.remove("--api")
     sf_dir = argv[0] if argv else "/root/testdata/sf0.1"
     names = argv[1:]
 
     import __spark_entry__ as ent
     from impala_base_to_cdw_sizing_spark.session import build_spark
 
-    spark = build_spark("capture-plans", data_dir=sf_dir)
+    spark = build_spark("capture-plans", data_dir=None if api else sf_dir)
+    out_dir = REPO / "plans" / tag
+    out_dir.mkdir(parents=True, exist_ok=True)
+    if api:
+        return _capture_api(spark, out_dir, suffix)
     registry = dict(ent.queries())
     registry.update(ent.extra_queries())
     if not names:
         names = list(ent.queries())
-    out_dir = Path(__file__).resolve().parent.parent / "plans" / tag
-    out_dir.mkdir(parents=True, exist_ok=True)
     rc = 0
     for name in names:
         fn = registry.get(name)
@@ -57,8 +103,8 @@ def main() -> int:
             continue
         try:
             df = fn(spark, sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
+            plan = _explain(df, "formatted").replace(
+                str(Path(sf_dir).resolve().parent), "<testdata>"
             )
         except Exception as e:  # noqa: BLE001
             print(f"ERR {name}: {str(e)[:200]}", file=sys.stderr)
